@@ -1,28 +1,49 @@
-"""Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Timing harness: the one tool that times registered queries.
 
-Execution is measured with the noop sink (full plan runs, nothing is
-collected to the driver), after an untimed warmup query that absorbs JVM/
-codegen startup so per-query numbers reflect the plans, not the JIT.
+Usage:
+    python bench.py [--median N] [--plans DIR] [query ...]
 
-``--median N`` (round-5 verdict item 6) runs every query N times and
-records per-query run lists + warm medians into BENCH_DETAIL.json
-alongside the single-pass (first-run) totals, so an apparent regression
-in a driver round is diffable from artifacts: ambient-host noise shows
-as a first-run outlier with a flat median; a real plan regression moves
-the median.  The headline JSON keeps the single-pass total as `value`
-(comparable across rounds) and adds `median_total` when N > 1.  This
-host is shared — BENCHNOTES.md records the warm bands.
+Queries run at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test corpus) on
+local[$SPARK_GRAFT_CPUS].  Execution is measured with the noop sink (full
+plan runs, nothing is collected to the driver), after an untimed warmup
+that absorbs JVM/codegen startup so per-query numbers reflect the plans,
+not the JIT.  Both modes below pay the same session start and warmup, so
+their numbers are comparable.
+
+The mode follows from the input:
+
+- No query names: a full-registry run (every registry entry, in registry
+  order, minus ``BENCH_EXCLUDE``).  Prints ONE JSON line {"metric",
+  "value", "unit", "queries", "sf", ...} whose ``value`` is the total of
+  the first runs (comparable across rounds), and writes the per-query
+  map to BENCH_DETAIL.json.
+- One or more query names: a retime run.  The named queries are
+  bracketed by a ``q1_pricing_summary`` control, so ambient-host swings
+  are visible in the same session; one line per query gives the first
+  run, the warm median and every run.  BENCH_DETAIL.json is not written,
+  so a partial run never overwrites the full-registry artifact.
+
+``--median N`` runs every query N times.  The warm median is the median
+of every run after the first (the cold outlier the median exists to
+exclude); in a full-registry run the run lists and warm medians go into
+BENCH_DETAIL.json and the headline adds ``median_total``.  Ambient-host
+noise shows as a first-run outlier with a flat median; a real plan
+regression moves the median.  ``--plans DIR`` writes each timed query's
+``.explain("formatted")`` output to ``DIR/<query>.txt`` (controls
+excluded).  This host is shared — BENCHNOTES.md records the warm bands.
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import json
 import os
 import re
+import statistics
 import sys
 import time
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -34,277 +55,52 @@ from eecs485_p4_mapreduce_spark.plans import REGISTRY  # noqa: E402
 # headline JSON so a shrinking bench is always visible.
 BENCH_EXCLUDE: dict[str, str] = {}
 
-# Curated ordering (operator families grouped, shuffle/join-heavy first);
-# registry entries not listed run after these, in registry order.
-_ORDERED = [
-    "q1_pricing_summary",
-    "agg_variants",
-    "topk_orders",
-    "join_customer_orders",
-    "join_revenue_by_nation",
-    "join_broadcast_nation",
-    "join_semi",
-    "join_asof_events",
-    "window_rank_orders",
-    "window_running_sum",
-    "session_window_30m",
-    "rollup_orders",
-    "tumbling_window_1h",
-    "wordcount",
-    "grep",
-    "distinct_tokens",
-    "lang_id",
-    "quality_score",
-    "quality_bigram_surprisal",
-    "tfidf_top_terms",
-    "fingerprint",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "knn_cosine",
-    "knn_ivf_label",
-    "ann_lsh_hyperplane",
-    "multimodal_meta",
-    "multimodal_frames",
-    "grouping_sets_orders",
-    "join_full_outer",
-    "pivot_year_status",
-    "percentiles_price",
-    "window_range_frame",
-    "udaf_grouped_pandas",
-    "udtf_chunk_text",
-    "pipeline_training_data",
-    "mix_sources_weighted",
-    "pack_sequences_greedy",
-    "graph_pagerank",
-    "embedding_top_pc_power_iteration",
-    "embedding_kmeans_ivf_train",
-    "stats_moments",
-    "mr_wordcount",
-    "streaming_tumbling_1h",
-    "tpch_q3_shipping_priority",
-    "subquery_in_q18",
-    "sample_split_train_val_test",
-    "sample_per_lang_quota",
-    "resample_gapfill_1h",
-    "dedup_fuzzy_levenshtein",
-    "ann_lsh_multiprobe",
-    "dedup_incremental_minhash",
-    "stats_zscore_outliers",
-    "lateral_topk_orders",
-    "sample_stratified_fraction",
-    "funnel_view_click_purchase",
-    "histogram_value_bins",
-    "unpivot_lineitem_metrics",
-    "window_value_fns",
-    "tpch_q4_priority_count",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_effect",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_discounted_revenue",
-    "token_bigrams",
-    "sample_weighted_bernoulli",
-    "sketch_hll_mergeable",
-    "recursive_cte_tree_rollup",
-    "multimodal_resize_sample",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q12_late_lines",
-    "tpch_q21_suppliers_kept_waiting",
-    "tpch_q13_custdist",
-    "tpch_q15_top_supplier",
-    "tpch_q22_sales_opportunity",
-    "dedup_ngram_spans",
-    "contamination_cross_source",
-    "streaming_stateful_user_stats",
-    "streaming_tumbling_append",
-    "bitops_orders",
-    "scalar_string_fns2",
-    "skew_salted_count",
-    "multimodal_audio_windows",
-    "source_python_datasource_arrow",
-    "quality_repetition",
-    "text_redact_numbers",
-    "ids_contiguous_assign",
-    "mapinarrow_vector_norms",
-    "dedup_semdedup_clusters",
-    "sketch_countmin_heavy_hitters",
-    "token_bpe_merge_step",
-    "token_bpe_train_3merges",
-    "hof_array_fns",
-    "url_fns",
-    "chunk_sliding_windows",
-    "chunk_content_defined",
-    "quality_gopher_rules",
-    "dedup_span_rewrite",
-    "knn_hard_negatives",
-    "embedding_matryoshka_topk",
-    "rollup_multires_events",
-    "ann_pq_adc",
-    "pattern_funnel_sessions",
-    "stats_winsorize_events",
-    "streaming_join_left_outer",
-    "graph_triangle_count",
-    "cohort_retention_weekly",
-    "rfm_segmentation",
-    "quality_token_entropy",
-    "streaming_join_full_outer",
-    "search_phrase_positions",
-    "search_tfidf_rank",
-    "scd2_user_state_history",
-    "stats_correlation",
-    "search_bm25_rank",
-    "privacy_k_anonymity",
-    "multimodal_phash_neardup",
-    "udaf_grouped_arrow",
-    "streaming_chained_agg_join",
-    "cdc_compact_latest",
-    "snapshot_diff_users",
-    "embedding_dim_stats",
-    "dedup_prefix_filter_jaccard",
-    "mv_incremental_refresh",
-    "pivot_multi_agg",
-    "stats_exact_median_distributed",
-    "recursive_cte_path_counts",
-    "window_ratio_to_report",
-    "window_gaps_islands",
-    "stats_mad_events",
-    "quality_benford_digits",
-    "dedup_soft_weights",
-    "corpus_zipf_slope",
-    "privacy_dp_noisy_histogram",
-    "mix_epoch_token_budget",
-    "dq_observe_metrics",
-    "sql_scripting_threshold_search",
-    "search_docsim_sparse_cosine",
-    "ml_feature_hashing",
-    "pipeline_curation_end_to_end",
-    "source_schema_evolution_merge",
-    "stats_watermark_lateness",
-    "streaming_late_drop_curve",
-    "pipeline_rag_index_build",
-    "token_length_histogram",
-    "dedup_quality_impact",
-    "udx_cogroup_merge_asof",
-    "corpus_modality_coverage",
-    "join_dynamic_partition_pruning",
-    "stats_gini_revenue",
-    "quality_perplexity_buckets",
-    "streaming_auto_watermark_tumbling",
-    "join_point_in_time_scd2",
-    "contamination_split_leakage",
-    "window_time_weighted_avg",
-    "window_abc_classification",
-    "resample_peak_preserving",
-    "graph_lpa_communities",
-    "text_keywords_rake",
-    "timeseries_seasonal_residual",
-    "multimodal_vad_segments",
-    "dedup_minhash_calibration",
-    "agg_argminmax_by",
-    "corpus_kl_divergence_by_source",
-    "stats_theil_within_nation",
-    "mix_temperature_sampling",
-    "quality_repeated_ngrams",
-    "inference_linear_scores",
-    "mr_inverted_index",
-    "privacy_pseudonymize",
-    "sink_python_datasource",
-    "streaming_session_append",
-    "sketch_bloom_tokens",
-    "window_topk_with_ties",
-    "window_since_last_event",
-    "window_period_over_period",
-    "ml_logreg_gradient_step",
-    "stats_chi_square_independence",
-    "streaming_sliding_append",
-    "join_asof_tolerance",
-    "udtf_table_arg_stats",
-    "dq_referential_integrity",
-    "dq_profile_orders",
-    "funnel_time_to_convert",
-    "attribution_first_vs_last",
-    "cohort_retention_rate",
-    "assoc_session_lift",
-    "sample_bootstrap_poisson",
-    "graph_markov_transitions",
-    "text_ngram_novelty",
-    "histogram_equidepth_deciles",
-    "tumbling_window_offset",
-    "multimodal_chunk_reassembly",
-    "stats_threshold_crossings",
-    "timeseries_ewma_hourly",
-    "stats_autocorr_lag1",
-    "window_rolling_median_24h",
-    "stats_trend_ols_daily",
-    "join_interval_overlap",
-    "privacy_l_diversity",
-    "ml_naive_bayes_train",
-    "graph_kcore_2core",
-    "window_cumulative_users",
-    "window_rolling_dau_7d",
-    "stats_ks_drift_by_source",
-    "search_rrf_fusion",
-    "stats_mannwhitney_en_lengths",
-    "embedding_centroid_similarity",
-    "join_asof_forward",
-    "stats_cusum_changepoint",
-    "stats_interarrival_burstiness",
-    "source_state_store_reader",
-    "lang_id_confusion",
-    "window_rolling_hll_7d",
-    "session_incremental_merge",
-    "udf_arrow_optimized",
-    "session_window_dynamic_gap",
-    "streaming_session_dynamic_gap",
-    "mix_quality_weighted",
-    "inference_threshold_sweep",
-    "agg_filter_clause",
-    "subquery_exists_projection",
-    "sketch_ams_f2_tokens",
-    "corpus_vocab_venn",
-    "text_hapax_rate",
-    "join_range_banded_prices",
-    "skyline_orders_pareto",
-    "multimodal_patch_grid",
-    "graph_temporal_reach_2hop",
-]
+BENCH_QUERIES = [n for n in REGISTRY if n not in BENCH_EXCLUDE]
 
-BENCH_QUERIES = [n for n in _ORDERED if n not in BENCH_EXCLUDE] + [
-    n for n in REGISTRY if n not in _ORDERED and n not in BENCH_EXCLUDE
-]
+CONTROL = "q1_pricing_summary"
 
 
-def main() -> None:
-    import argparse
+def warm_median(runs: list[float]) -> float:
+    """Median of the warm runs (every run after the first); an even
+    count averages the middle pair.  A single run is its own median."""
+    return statistics.median(runs[1:] or runs)
 
-    ap = argparse.ArgumentParser(description=__doc__)
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "queries",
+        nargs="*",
+        metavar="query",
+        help="retime these queries (control-bracketed); none = full registry",
+    )
     ap.add_argument(
         "--median",
         type=int,
         default=1,
         metavar="N",
-        help="run each query N times; record run lists + warm medians"
-        " in BENCH_DETAIL.json (default 1 = single pass, round-driver mode)",
+        help="run each query N times and report warm medians (default 1)",
     )
-    args = ap.parse_args()
+    ap.add_argument(
+        "--plans", default=None, metavar="DIR", help="dir for explain dumps"
+    )
+    args = ap.parse_args(argv)
+    # check every name before a JVM starts
+    unknown = [q for q in args.queries if q not in REGISTRY]
+    if unknown:
+        ap.error("unknown query: " + " ".join(unknown))
+
     n_runs = max(args.median, 1)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
     spark = get_spark("spark-graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warmup (untimed): JVM + codegen + parquet footer caches, plus one
     # trivial Pandas UDF so Python worker + Arrow spin-up isn't billed to
     # whichever UDF query happens to run first.
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    REGISTRY[CONTROL].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
@@ -316,18 +112,45 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    times: dict[str, float] = {}
+    def run_once(name: str) -> float:
+        spark.sparkContext.setJobDescription(f"bench:{name}")
+        t0 = time.time()
+        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        dt = round(time.time() - t0, 3)
+        spark.sparkContext.setJobDescription(None)
+        return dt
+
+    def dump_plan(name: str) -> None:
+        os.makedirs(args.plans, exist_ok=True)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            REGISTRY[name].fn(spark, sf_dir).explain("formatted")
+        with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+            fh.write(buf.getvalue())
+
+    if args.queries:
+        for i, name in enumerate([CONTROL, *args.queries, CONTROL]):
+            rs = [run_once(name) for _ in range(n_runs)]
+            control = i in (0, len(args.queries) + 1)
+            label = f"{name} (control)" if control else name
+            print(
+                f"{label:45s} first={rs[0]:7.3f}  med={warm_median(rs):7.3f}  runs="
+                + " ".join(f"{r:.3f}" for r in rs),
+                flush=True,
+            )
+            if args.plans and not control:
+                dump_plan(name)
+        return
+
     runs: dict[str, list[float]] = {}
     for name in BENCH_QUERIES:
-        fn = REGISTRY[name].fn
-        rs: list[float] = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            rs.append(round(time.time() - t0, 3))
-        runs[name] = rs
-        times[name] = rs[0]  # first run = the comparable single-pass time
+        runs[name] = [run_once(name) for _ in range(n_runs)]
+        if args.plans:
+            dump_plan(name)
+    times = {n: rs[0] for n, rs in runs.items()}  # first run = single-pass time
 
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
     total = round(sum(times.values()), 3)
     # Full per-query map goes to a FILE; the stdout line stays short (the
     # round-1 driver captured only a truncated tail of a 75-entry inline
@@ -354,12 +177,7 @@ def main() -> None:
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
     if n_runs > 1:
-        # median over the WARM runs only (the first run is the cold
-        # outlier the median exists to exclude; an upper median of ALL
-        # runs would report the cold run itself at --median 2)
-        medians = {
-            n: sorted(rs[1:])[(len(rs) - 2) // 2] for n, rs in runs.items()
-        }
+        medians = {n: round(warm_median(rs), 4) for n, rs in runs.items()}
         detail_payload["median_n"] = n_runs
         detail_payload["median"] = medians
         detail_payload["runs"] = runs

@@ -10,12 +10,11 @@ rewritten in place mid-application would be served stale.
 
 This module fixes both:
 
-- :class:`LRU` — a small ordered cache (default 4 slots,
-  ``SPARK_GRAFT_MEMO_SLOTS`` overrides) with a per-entry eviction
-  callback so the owner can drop the global temp view / unpersist when
-  an entry ages out.  Dropping the last reference makes the JVM Dataset
-  collectible and Spark's ContextCleaner reclaims the checkpointed
-  blocks.
+- :class:`LRU` — a small ordered cache (:data:`MEMO_SLOTS` slots) with
+  a per-entry eviction callback so the owner can drop the global temp
+  view / unpersist when an entry ages out.  Dropping the last reference
+  makes the JVM Dataset collectible and Spark's ContextCleaner reclaims
+  the checkpointed blocks.
 - :func:`mtime_token` — a filesystem freshness token folded into cache
   keys, so rewriting the parquet under a cached sf_dir changes the key
   and the stale entry simply stops being hit (and ages out of the LRU).
@@ -27,14 +26,9 @@ import os
 from collections import OrderedDict
 from typing import Any, Callable
 
-
-def memo_slots(default: int = 4) -> int:
-    """Cache capacity: entries are per-corpus, so this is 'how many
-    corpora may stay warm at once'."""
-    try:
-        return max(int(os.environ.get("SPARK_GRAFT_MEMO_SLOTS", default)), 1)
-    except ValueError:
-        return default
+# Cache capacity: entries are per-corpus, so this is 'how many corpora
+# may stay warm at once'.
+MEMO_SLOTS = 4
 
 
 # Every LRU instance registers here so sweep tools can release ALL
@@ -57,7 +51,7 @@ class LRU:
     """Insertion/access-ordered bounded cache with eviction callbacks."""
 
     def __init__(self, maxsize: int | None = None) -> None:
-        self.maxsize = maxsize if maxsize is not None else memo_slots()
+        self.maxsize = maxsize if maxsize is not None else MEMO_SLOTS
         self._d: "OrderedDict[Any, tuple[Any, Callable | None]]" = OrderedDict()
         _ALL_CACHES.append(self)
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.hashfn import hex_int_sql
+from eecs485_p4_mapreduce_spark.sources import widen_scan
 
 K = 16          # minhash signature length
 BANDS = 8       # LSH bands (r = K // BANDS = 2 rows per band)
@@ -149,9 +150,7 @@ def minhash_banded(
     # when the source under-delivers: at real scale the scan has far more
     # splits than cores and this branch never fires, so no full-text
     # shuffle is ever added to the 100 TB plan.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if lt.rdd.getNumPartitions() < target:
-        lt = lt.repartition(target, "doc_id")
+    lt = widen_scan(lt, "doc_id")
     hx = lt.select("doc_id", F.explode(F.expr(sh_from_lt)).alias("h"))
     hint = hx.select(
         "doc_id",

@@ -100,7 +100,7 @@ _hex_int_sql = hex_int_sql
 # monkeypatch load_table get their own entries instead of a stale
 # corpus.
 #
-# Bounded: an LRU (SPARK_GRAFT_MEMO_SLOTS corpora, default 4).  Each
+# Bounded: an LRU (memo.MEMO_SLOTS corpora).  Each
 # live entry pins one localCheckpointed RDD (~corpus rows x 16 ints) —
 # the point: it IS the stored signature table — but eviction drops the
 # global temp view, after which ContextCleaner reclaims the blocks, so
@@ -1579,9 +1579,7 @@ def _calibration_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         # compact parquet delivers one scan partition, which would build
         # every shingle array on one core; no-op when the scan already
         # has enough splits (always, at real scale)
-        target = spark.sparkContext.defaultParallelism
-        if sh_base.rdd.getNumPartitions() < target:
-            sh_base = sh_base.repartition(target, "doc_id")
+        sh_base = widen_scan(sh_base, "doc_id")
         return sh_base.select("doc_id", shingles("text", _SHINGLE).alias("sh"))
 
     if _mtime_token(sf_dir) is not None:
@@ -2031,8 +2029,6 @@ def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_a on equal sizes.  Scale shape: gram df is a map-side-
     combinable aggregate; only rare-gram postings join; the verify
     joins candidates (bounded) back to the materialized gram arrays."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # 4-gram transform off the compact scan's single core (the
     # dedup_ngram_jaccard fix)
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")

@@ -20,7 +20,7 @@ from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio_signed_sql,
 )
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 _ITERS = 10
 _DAMP = 0.85
@@ -168,17 +168,21 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   100 TB move for this family (BENCHNOTES).
 
 
-def _wide_oe(oe: DataFrame) -> DataFrame:
-    """Conditional keyed repartition of the oriented-edge frame before a
-    wedge/triangle self-join (the minhash_banded pattern, at the JOIN
-    level): the published edge parquet is one compact split, and the
-    self-joins broadcast one side — so the stream side's task count IS
-    the edge scan's split count, and the whole wedge fan-out (6.6M rows
-    from 107k edges at sf0.1) plus its map-side partial aggregation was
-    produced on as many cores as there were plan branches (measured: a
-    3-task union stage doing 4.8s of enumeration).  Spreading the 107k
-    edge rows first is ~3MB of shuffle for a >10x wider produce stage;
-    a wide production scan never pays it.
+def _oriented_wedges(oe: DataFrame, widen: bool = True) -> DataFrame:
+    """Every wedge {x, y}-through-some-middle exactly once, as id-
+    canonical pairs ``(u, w)`` with ``u < w`` — the same multiset the
+    both-directions ``adj JOIN adj ON a1.v = a2.u WHERE a1.u < a2.v``
+    enumeration produces, at i^2+io+o^2 join volume per middle.
+
+    ``widen`` spreads the oriented-edge frame first (:func:`widen_scan`
+    on ``lo, hi``, at the JOIN level): the published edge parquet is one
+    compact split, and the self-joins broadcast one side — so the stream
+    side's task count IS the edge scan's split count, and the whole
+    wedge fan-out (6.6M rows from 107k edges at sf0.1) plus its map-side
+    partial aggregation was produced on as many cores as there were plan
+    branches (measured: a 3-task union stage doing 4.8s of enumeration).
+    Spreading the 107k edge rows first is ~3MB of shuffle for a >10x
+    wider produce stage; a wide production scan never pays it.
 
     Pay it ONLY where the consumer AGGREGATES the wedge stream (the
     linkpred groupBys: map-side partial aggregation from 32 producer
@@ -187,21 +191,9 @@ def _wide_oe(oe: DataFrame) -> DataFrame:
     re-shuffles raw wedge rows anyway (the centrality DISTINCT's own
     128-way repartition, the triangle closing-edge probe) the extra
     exchange only adds shuffle machinery — measured centrality 3.1 ->
-    4.2 s WITH the spread — so those paths pass widen=False."""
-    target = oe.sparkSession.sparkContext.defaultParallelism
-    if oe.rdd.getNumPartitions() < target:
-        oe = oe.repartition(target, "lo", "hi")
-    return oe
-
-
-def _oriented_wedges(oe: DataFrame, widen: bool = True) -> DataFrame:
-    """Every wedge {x, y}-through-some-middle exactly once, as id-
-    canonical pairs ``(u, w)`` with ``u < w`` — the same multiset the
-    both-directions ``adj JOIN adj ON a1.v = a2.u WHERE a1.u < a2.v``
-    enumeration produces, at i^2+io+o^2 join volume per middle.
-    ``widen`` per the :func:`_wide_oe` decision rule."""
+    4.2 s WITH the spread — so those paths pass ``widen=False``."""
     if widen:
-        oe = _wide_oe(oe)
+        oe = widen_scan(oe, "lo", "hi")
     a, b = oe.alias("a"), oe.alias("b")
     ka_hi = F.struct(F.col("a.dhi"), F.col("a.hi"))
     kb_hi = F.struct(F.col("b.dhi"), F.col("b.hi"))
@@ -275,7 +267,7 @@ def _triangles_from_oriented(oe: DataFrame) -> DataFrame:
     closure lists): out-out wedges at the key-minimum vertex, closed by
     one oriented-edge probe — sum(out-degree^2) total wedge work.
     Split from the corpus wrapper so the property test can drive it
-    over arbitrary generated edge sets.  No _wide_oe here: the closing
+    over arbitrary generated edge sets.  No widen_scan here: the closing
     probe re-joins raw rows rather than aggregating them, and the A/B
     measured the spread slightly NEGATIVE (1.13 -> 1.24 s warm)."""
     ab, ac, bc = oe.alias("ab"), oe.alias("ac"), oe.alias("bc")
@@ -1393,7 +1385,7 @@ def graph_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     edges = lsh_candidate_edges(spark, sf_dir)
-    oe = _wide_oe(lsh_oriented_edges(spark, sf_dir))
+    oe = widen_scan(lsh_oriented_edges(spark, sf_dir), "lo", "hi")
     a, b = oe.alias("a"), oe.alias("b")
     ka_hi = F.struct(F.col("a.dhi"), F.col("a.hi"))
     kb_hi = F.struct(F.col("b.dhi"), F.col("b.hi"))

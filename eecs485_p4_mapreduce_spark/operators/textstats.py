@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio, hu_ratio_sql
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 # n-gram/stopword profiles for the language-ID heuristic.  Tiny on purpose:
 # at scale these ship as a broadcast literal, not a join.
@@ -438,8 +438,6 @@ def quality_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-aggregates plus two equi-joins, with frequency floors to cap
     vocab (not needed at test scale).
     """
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # the bigram stream is replayed by THREE consumers (c2, c1, and the
     # scoring join) — without the keyed spread each replay regenerates
     # every bigram on the compact scan's one core
@@ -707,8 +705,6 @@ def _bpe_string_frame(docs: DataFrame, *carry: str) -> DataFrame:
     keyed via ``widen_scan`` (round-13 ADVICE: an already-wide
     production scan must not pay a keyless full exchange of document
     text per BPE query)."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     return widen_scan(docs, "doc_id").select(
         *carry, _bpe_doc_string(tokens("text")).alias("s")
     )
@@ -1088,8 +1084,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself across documents).  Shuffle keys are 3-gram strings and doc
     ids; the per-doc distinct keeps internal repeats from inflating
     document frequency."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # the 3-gram stream is replayed by the df aggregate AND the marking
     # join — spread the compact scan first
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -1468,8 +1462,6 @@ def quality_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise stable.  Per-bucket means sum the already-rounded per-doc
     scores in decimal.
     """
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # same three-consumer bigram replay as quality_bigram_surprisal —
     # spread the scan before the per-token transform
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -2651,8 +2643,6 @@ def preference_pairs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         hu_ratio_signed,
     )
     from eecs485_p4_mapreduce_spark.functions.ranking import with_global_rank
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # feat re-tokenizes the text for three feature columns in one
     # projection — spread the compact scan so it runs wide
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")

@@ -17,6 +17,7 @@ is used here only because the harness wants the full final table.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -28,6 +29,14 @@ from eecs485_p4_mapreduce_spark.functions.numeric import dsum, dsum_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table
 from eecs485_p4_mapreduce_spark.sources.tables import normalize_events_ts
+
+# Local-scale state-partition width for stateful streams (see
+# run_to_completion); a cluster raises it with the key cardinality.
+STATE_PARTITIONS = 8
+
+# Age after which a dead application's band index is swept (see
+# _band_index_table).
+INDEX_TTL_S = 72 * 3600
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,26 +78,25 @@ def run_to_completion(
     pays per-partition state-store commit overhead EVERY microbatch --
     at local test scale 32 partitions is pure overhead (measured:
     stream-stream outer join 5.6s -> 3.0s, chained agg+join 8.2s ->
-    3.5s at 8 partitions).  At cluster scale this knob goes UP with the
-    key cardinality; SPARK_GRAFT_STREAM_SHUFFLE overrides.  The batch
-    conf is restored afterward, and results are partition-count
-    invariant (hash state partitioning only shards keys).
+    3.5s at 8 partitions, :data:`STATE_PARTITIONS`).  At cluster scale
+    this width goes UP with the key cardinality.  The batch conf is
+    restored afterward, and results are partition-count invariant (hash
+    state partitioning only shards keys).
 
     ``state_partitions`` is the per-query width for queries whose state
     layout multiplies the per-partition commit cost (a stream-stream
     join store commits FOUR sub-stores per partition per batch, so its
-    file count is 4 x width x batches) — the operator env var still
-    wins, so one cluster-side setting scales every query together."""
-    import os
+    file count is 4 x width x batches).
 
+    The checkpoint dir is removed once the availableNow query has
+    terminated: the memory sink already holds every output row, and
+    nothing reads the checkpoint afterwards."""
     name = f"sg_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="spark-graft-ckpt-")
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if width is None:
-        width = str(state_partitions) if state_partitions is not None else "8"
-    spark.conf.set("spark.sql.shuffle.partitions", width)
+    width = state_partitions if state_partitions is not None else STATE_PARTITIONS
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -101,6 +109,7 @@ def run_to_completion(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -352,7 +361,7 @@ def streaming_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame
     # stream-stream join state commits four sub-stores per partition
     # per batch - width 2 quarters the commit-file count at bench
     # scale (measured 3.6 -> 2.5 s full outer, 4.9 -> 3.8 s chained);
-    # SPARK_GRAFT_STREAM_SHUFFLE scales it back up on a cluster
+    # a cluster raises it with the key cardinality
     return run_to_completion(joined, mode="append", state_partitions=2)
 
 
@@ -685,7 +694,6 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         # orphaned location (same app name re-launched, crash leftovers)
         # is swept only when it is NOT a table in this session's catalog.
         import os
-        import shutil
         from urllib.parse import urlparse
 
         app_tag = hashlib.md5(
@@ -700,18 +708,17 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(loc)  # orphan: the DROP above removed any
             # catalog entry this application could have had
         # GC sibling orphans from DEAD applications: same corpus tag,
-        # different app tag, untouched for > SPARK_GRAFT_INDEX_TTL_H
-        # hours (default 72).  "Untouched" means NOT QUERIED: the
-        # cache-hit path above utimes the owner's dir on every re-read,
-        # so a live application's index stays younger than the TTL as
-        # long as it queries at least once per TTL window.  A live app
+        # different app tag, untouched for > INDEX_TTL_S (72 hours).
+        # "Untouched" means NOT QUERIED: the cache-hit path above utimes
+        # the owner's dir on every re-read, so a live application's
+        # index stays younger than the TTL as long as it queries at
+        # least once per TTL window.  A live app
         # idle on this corpus for the entire TTL can still lose its
         # index; the cache-hit path detects the missing dir and
         # rebuilds, so the cost is one rebuild, never a broken read.
         # Size the TTL above the longest expected idle gap anyway.
         import time
 
-        ttl_s = float(os.environ.get("SPARK_GRAFT_INDEX_TTL_H", "72")) * 3600
         prefix = f"sg_band_index_{dir_tag}_"
         for entry in os.listdir(wh) if os.path.isdir(wh) else []:
             sib = os.path.join(wh, entry)
@@ -719,7 +726,7 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 entry.startswith(prefix)
                 and entry != name
                 and os.path.isdir(sib)
-                and time.time() - os.path.getmtime(sib) > ttl_s
+                and time.time() - os.path.getmtime(sib) > INDEX_TTL_S
             ):
                 shutil.rmtree(sib, ignore_errors=True)
         _, banded = minhash_signatures(spark, sf_dir)
@@ -1086,7 +1093,7 @@ def streaming_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-stream join state commits four sub-stores per partition
     # per batch - width 2 quarters the commit-file count at bench
     # scale (measured 3.6 -> 2.5 s full outer, 4.9 -> 3.8 s chained);
-    # SPARK_GRAFT_STREAM_SHUFFLE scales it back up on a cluster
+    # a cluster raises it with the key cardinality
     return run_to_completion(joined, mode="append", state_partitions=2)
 
 
@@ -1170,7 +1177,7 @@ def streaming_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-stream join state commits four sub-stores per partition
     # per batch - width 2 quarters the commit-file count at bench
     # scale (measured 3.6 -> 2.5 s full outer, 4.9 -> 3.8 s chained);
-    # SPARK_GRAFT_STREAM_SHUFFLE scales it back up on a cluster
+    # a cluster raises it with the key cardinality
     return run_to_completion(joined, mode="append", state_partitions=2)
 
 
@@ -1235,7 +1242,7 @@ def streaming_chained_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-stream join state commits four sub-stores per partition
     # per batch - width 2 quarters the commit-file count at bench
     # scale (measured 3.6 -> 2.5 s full outer, 4.9 -> 3.8 s chained);
-    # SPARK_GRAFT_STREAM_SHUFFLE scales it back up on a cluster
+    # a cluster raises it with the key cardinality
     return run_to_completion(joined, mode="append", state_partitions=2)
 
 
@@ -1347,8 +1354,6 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted result comes from the STATE FILES.  At scale the state
     source reads the per-partition state stores in parallel straight
     from the checkpoint filesystem, no running query required."""
-    import os
-
     # Stream start, shuffle-width conf, and statestore read all on the
     # streaming child (the run_to_completion discipline, inlined).
     spark = stream_session(spark)
@@ -1359,10 +1364,7 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"sg_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="spark-graft-statesrc-")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             agg.writeStream.format("memory")

@@ -32,6 +32,7 @@ query still runs on a vanilla session.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -90,26 +91,43 @@ def _run_chunked(vanilla: bool, sf_dir: str, chunk: int) -> int:
                 if results.get(n, {}).get("err") is not None
             )
     print(f"\n{len(names) - failures}/{len(names)} passed (chunked x{chunk})")
+    _write_artifact(
+        results, sf_dir, vanilla, len(names) - failures, len(names), chunk
+    )
+    return 1 if failures else 0
+
+
+def _write_artifact(
+    results: dict[str, dict],
+    sf_dir: str,
+    vanilla: bool,
+    passed: int,
+    total: int,
+    chunk: int | None = None,
+) -> None:
+    """Write a full-registry sweep's per-query results plus a ``_meta``
+    entry to ``CORRECTNESS_LOCAL{suffix}.json`` at the repo root."""
     head = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip()
-    results["_meta"] = {
+    meta = {
         "head": head,
         "sf_dir": sf_dir,
         "vanilla": vanilla,
-        "chunked": chunk,
         "when": time.strftime("%Y-%m-%d %H:%M:%S"),
-        "passed": len(names) - failures,
-        "total": len(names),
+        "passed": passed,
+        "total": total,
     }
+    if chunk is not None:
+        meta["chunked"] = chunk
+    results["_meta"] = meta
     base = os.path.basename(os.path.normpath(sf_dir))
     suffix = "" if base == "sf0.01" else f"_{base}"
     out = os.path.join(REPO, f"CORRECTNESS_LOCAL{suffix}.json")
     with open(out, "w") as f:
         json.dump(results, f, indent=1, sort_keys=True)
     print(f"wrote {out}")
-    return 1 if failures else 0
 
 
 def _release_blocks(spark) -> None:
@@ -147,20 +165,16 @@ def _release_blocks(spark) -> None:
 
 
 def main() -> int:
-    argv = sys.argv[1:]
-    vanilla = "--vanilla" in argv
-    argv = [a for a in argv if a != "--vanilla"]
-    chunk = None
-    partial = None
-    if "--chunk" in argv:
-        i = argv.index("--chunk")
-        chunk = int(argv[i + 1])
-        del argv[i:i + 2]
-    if "--partial" in argv:
-        i = argv.index("--partial")
-        partial = argv[i + 1]
-        del argv[i:i + 2]
-    args = argv
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("--vanilla", action="store_true")
+    ap.add_argument("--chunk", type=int, default=None, metavar="N")
+    # child mode of --chunk: dump this batch's results to a JSON file
+    ap.add_argument("--partial", default=None, help=argparse.SUPPRESS)
+    ap.add_argument("args", nargs="*", metavar="[sf_dir] [query ...]")
+    ns = ap.parse_intermixed_args()
+    vanilla, chunk, partial, args = ns.vanilla, ns.chunk, ns.partial, ns.args
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     names = [a for a in args if not os.path.isdir(a)] or list(REGISTRY)
     if chunk and set(names) == set(REGISTRY):
@@ -272,24 +286,7 @@ def main() -> int:
         with open(partial, "w") as f:
             json.dump(results, f)
     if set(names) == set(REGISTRY):
-        head = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "HEAD"],
-            capture_output=True, text=True,
-        ).stdout.strip()
-        results["_meta"] = {
-            "head": head,
-            "sf_dir": sf_dir,
-            "vanilla": vanilla,
-            "when": time.strftime("%Y-%m-%d %H:%M:%S"),
-            "passed": len(names) - failures,
-            "total": len(names),
-        }
-        base = os.path.basename(os.path.normpath(sf_dir))
-        suffix = "" if base == "sf0.01" else f"_{base}"
-        out = os.path.join(REPO, f"CORRECTNESS_LOCAL{suffix}.json")
-        with open(out, "w") as f:
-            json.dump(results, f, indent=1, sort_keys=True)
-        print(f"wrote {out}")
+        _write_artifact(results, sf_dir, vanilla, len(names) - failures, len(names))
     return 1 if failures else 0
 
 
